@@ -3344,14 +3344,7 @@ def recsys_negative_samples(spark, sf_dir):
             "user_id",
             F.col("draw").cast("long").alias("draw"),
             (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat_ws(":", F.col("user_id"), F.col("draw"))), 1, 15
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % F.col("n_items")
+                hash60(F.concat_ws(":", F.col("user_id"), F.col("draw"))) % F.col("n_items")
             ).alias("idx"),
         )
     )

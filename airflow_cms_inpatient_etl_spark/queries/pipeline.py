@@ -53,11 +53,7 @@ def split_train_test_hash(spark, sf_dir):
     reassigns existing ones.  The 60-bit md5-prefix hash is the same portable
     construction used by the dedup operators."""
     d = load_table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    h = hash60(F.col("doc_id").cast("string"), "split:")
     bucket = (h % 100).alias("bucket")
     return d.select(
         "doc_id",
@@ -192,11 +188,7 @@ def sample_language_rebalance(spark, sf_dir):
     filter runs fused in the scan stage — zero shuffles at any scale
     (asserted in tests/test_plans.py)."""
     d = load_table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("strat:"), F.col("doc_id").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    h = hash60(F.col("doc_id").cast("string"), "strat:")
     rate = F.when(F.col("lang") == "en", 5).otherwise(20)
     return d.select("doc_id", "lang", (h % 100).alias("bucket")).filter(F.col("bucket") < rate)
 
@@ -241,11 +233,7 @@ def pack_token_budget(spark, sf_dir):
     from pyspark.sql import Window as W
 
     d = load_table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("pack:"), F.col("doc_id").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    h = hash60(F.col("doc_id").cast("string"), "pack:")
     t = d.select(
         "doc_id",
         "lang",
@@ -307,11 +295,7 @@ def docs_source_cap(spark, sf_dir):
     from pyspark.sql import Window as W
 
     d = load_table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("cap:"), F.col("doc_id").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    h = hash60(F.col("doc_id").cast("string"), "cap:")
     wl = W.partitionBy("source", "__shard").orderBy(F.col("hv").asc(), F.col("doc_id").asc())
     local = (
         d.select("doc_id", "source", "lang", "n_chars", h.alias("hv"))
@@ -430,11 +414,7 @@ def corpus_curation_v2(spark, sf_dir):
         F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("n_copies")
     )
     kept = reps.select("doc_id", "n_copies").join(fp, "doc_id")
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("cap:"), F.col("doc_id").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    h = hash60(F.col("doc_id").cast("string"), "cap:")
     # skew-safe two-phase top-K per source (same identity as docs_source_cap)
     wl = W.partitionBy("source", "__shard").orderBy(F.col("__hv").asc(), F.col("doc_id").asc())
     win = W.partitionBy("source").orderBy(F.col("__hv").asc(), F.col("doc_id").asc())
@@ -799,11 +779,7 @@ def corpus_curation_v6(spark, sf_dir):
         )
         .select("doc_id", "lang", "bpe_tokens")
     )
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("pack:"), F.col("doc_id").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    h = hash60(F.col("doc_id").cast("string"), "pack:")
     pw = (
         W.partitionBy("lang", "bucket")
         .orderBy("doc_id")

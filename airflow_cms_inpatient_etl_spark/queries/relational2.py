@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from airflow_cms_inpatient_etl_spark.functions.exact import dec, dsum
+from airflow_cms_inpatient_etl_spark.operators.text import hash60
 from airflow_cms_inpatient_etl_spark.queries.base import register
 from airflow_cms_inpatient_etl_spark.sources.registry import load_table
 
@@ -367,13 +368,7 @@ def deterministic_sample(spark, sf_dir):
     any cluster, any engine, any run: the right way to carve stable eval/test
     splits out of a 100 TB corpus."""
     li = load_table(spark, sf_dir, "lineitem")
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat_ws("#", F.col("l_orderkey"), F.col("l_linenumber"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = hash60(F.concat_ws("#", F.col("l_orderkey"), F.col("l_linenumber")))
     return li.filter(h % 100 < 5).select("l_orderkey", "l_linenumber", "l_quantity")
 
 

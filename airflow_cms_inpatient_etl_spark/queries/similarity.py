@@ -14,6 +14,7 @@ from airflow_cms_inpatient_etl_spark.operators.similarity import (
     brute_force_topk,
     embedding_neardup_pairs,
 )
+from airflow_cms_inpatient_etl_spark.operators.text import hash60
 from airflow_cms_inpatient_etl_spark.queries.base import register
 from airflow_cms_inpatient_etl_spark.sources.registry import load_table
 
@@ -587,11 +588,7 @@ def decontaminate_embedding_cosine(spark, sf_dir):
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("dsplit:"), F.col("vec_id").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    h = hash60(F.col("vec_id").cast("string"), "dsplit:")
     e = e.select("vec_id", "embedding", (h % 100).alias("b"))
     ev = (
         e.filter(F.col("b") < _DECON_EVAL_PCT)

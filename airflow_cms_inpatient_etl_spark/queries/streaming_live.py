@@ -1,11 +1,31 @@
 """Live Structured Streaming queries in the graded registry.
 
-The tumbling and late-data runs are deterministic functions of the fixture
-(complete-mode retention / pinned file order + integer-µs quantile cuts), so
-their final sink tables ARE batch-SQL-expressible and carry real DuckDB
-oracles.  The stream-stream join and the custom stateful operator keep
-rows-only checks (their incremental emission has no SQL form); their
-batch-equivalence is asserted in tests/test_streaming.py instead."""
+Each live query is the incremental twin of a batch query: it stages its
+input as files, streams them, drains the stream and returns the drained
+table, which is batch-SQL-expressible and carries a DuckDB oracle.  The drain
+contract, shared by every query here:
+
+* **8 state partitions.**  Every stream drains through
+  ``streaming.jobs.run_stream_to_memory`` (memory sink) or ``drain_stream``
+  (foreachBatch sinks), which run it with ``DRAIN_STATE_PARTITIONS`` = 8
+  shuffle partitions.  Stateful operators (windowed aggregation, dedup,
+  stream-stream joins, ``applyInPandasWithState``) run one state-store task
+  per shuffle partition per micro-batch, and the count is fixed when the
+  query starts: a long-lived production stream sizes it to its cluster once,
+  and the checkpoint pins it after.  A vanilla session's 200 partitions would
+  spend a one-shot fixture drain on task dispatch.  Every drained table here
+  is invariant to the count: window counts, sketch cells and leaf histograms
+  are associative integer adds, joins emit per matched pair, and watermark
+  late-drop semantics depend on batch boundaries, never on partitioning.
+* **Mtime-ordered single-file micro-batches.**  A multi-batch run stages one
+  parquet file per micro-batch with a pinned mtime and reads them with
+  ``maxFilesPerTrigger=1`` (``_one_file_per_batch``).  The file source picks
+  files oldest-mtime-first, so batch order and boundaries are deterministic,
+  which is what keeps those runs oracle-checkable.
+* **Session hygiene.**  Staging dirs (``STAGE_PREFIX`` under the temp dir)
+  are removed, the memory sink's temp view is dropped and the shuffle conf is
+  restored on exit, also when the query raises.
+"""
 
 from __future__ import annotations
 
@@ -13,14 +33,67 @@ import glob
 import os
 import shutil
 import tempfile
-import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from airflow_cms_inpatient_etl_spark.queries.base import register
+from pyspark.sql import functions as F
+
+# the batch twins whose oracles the lives reuse must be registered first
+from airflow_cms_inpatient_etl_spark.queries import curation2, dedup  # noqa: F401
+from airflow_cms_inpatient_etl_spark.functions.exact import dsum
+from airflow_cms_inpatient_etl_spark.operators.sketch import cms_estimate, dyadic_tree
+from airflow_cms_inpatient_etl_spark.operators.text import exploded_shingle_hashes
+from airflow_cms_inpatient_etl_spark.queries.analytics import (
+    _QD_BITS,
+    _QD_RADIX,
+    _qdigest_flags_from_tree,
+)
+from airflow_cms_inpatient_etl_spark.queries.base import QUERY_REGISTRY, register
+from airflow_cms_inpatient_etl_spark.session import scoped_conf
+from airflow_cms_inpatient_etl_spark.sources.registry import load_table, snapshot, spread_scan
 from airflow_cms_inpatient_etl_spark.streaming.jobs import (
+    drain_stream,
     run_stream_to_memory,
+    stream_asof_candidates,
+    stream_cms_cells,
+    stream_dedup_gate,
     stream_events,
+    stream_qdigest_leaves,
+    stream_stream_click_view_join,
     tumbling_counts,
 )
+from airflow_cms_inpatient_etl_spark.streaming.stateful import running_user_profile
+
+STAGE_PREFIX = "graft_stream_"
+
+# events staged with ts as µs longs, so the stream schema is explicit
+_EVENTS_US_SCHEMA = (
+    "event_id long, ts long, user_id long, event_type string, value double, props string"
+)
+
+
+@contextmanager
+def _staging() -> Iterator[str]:
+    """A fresh staging dir under the temp dir, removed on exit."""
+    stage_dir = tempfile.mkdtemp(prefix=STAGE_PREFIX)
+    try:
+        yield stage_dir
+    finally:
+        shutil.rmtree(stage_dir, ignore_errors=True)
+
+
+@contextmanager
+def _staged_events(sf_dir: str) -> Iterator[str]:
+    """A staging dir holding the events fixture as the stream's one file."""
+    with _staging() as stage_dir:
+        shutil.copy(f"{sf_dir}/events.parquet", f"{stage_dir}/part-0.parquet")
+        yield stage_dir
+
+
+def _one_file_per_batch(spark, schema, stage_dir: str):
+    """File-source stream over the staged files, one file per micro-batch in
+    mtime order."""
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage_dir)
 
 
 @register(
@@ -42,27 +115,8 @@ def streaming_tumbling_live(spark, sf_dir):
     is deterministically equal to the batch tumbling aggregation — which is
     exactly the SQL oracle: a live incremental execution whose final answer
     is still hash-checkable against DuckDB."""
-    stage_dir = tempfile.mkdtemp(prefix="events_stream_")
-    # state-store task dispatch scales with shuffle partitions per stateful
-    # stage per micro-batch; scope the one-shot fixture drain to 8 state
-    # partitions like the other lives (optimization round 15 — a long-lived
-    # production stream sizes this to its cluster once, the checkpoint pins
-    # it after; window counts are associative, so the drained table is
-    # partition-count-invariant)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        shutil.copy(f"{sf_dir}/events.parquet", f"{stage_dir}/part-0.parquet")
-        name = f"stream_live_{uuid.uuid4().hex[:8]}"
-        run_stream_to_memory(
-            tumbling_counts(stream_events(spark, stage_dir)), name, output_mode="complete"
-        )
-        return spark.table(name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        # the stream is stopped (run_stream_to_memory drains then stops), so
-        # the file-source staging dir is dead weight — remove it
-        shutil.rmtree(stage_dir, ignore_errors=True)
+    with _staged_events(sf_dir) as stage_dir:
+        return run_stream_to_memory(tumbling_counts(stream_events(spark, stage_dir)), "complete")
 
 
 def _stage_single_parquet(df, stage_dir: str, name: str, mtime: float) -> None:
@@ -92,17 +146,14 @@ def _stage_split_parquet(df, split_col, splits, stage_dir: str) -> None:
     Falls back to the per-split path for any label the partitioned write
     produced no directory for (an empty split writes nothing under
     ``partitionBy``; ``coalesce(1)`` always writes a schema-only file)."""
-    from pyspark.sql import functions as F
-
     tmp = os.path.join(stage_dir, "_tmp_split")
-    spark = df.sparkSession
     # dynamic-partition writes sort by the partition column first unless the
     # writer may keep one open file per partition; with 2-3 splits the
     # concurrent writers are free and the sort is a pure extra pass
     # (measured: it cost back the saved scan on the 600k-row lineitem split)
-    old_writers = spark.conf.get("spark.sql.maxConcurrentOutputFileWriters")
-    try:
-        spark.conf.set("spark.sql.maxConcurrentOutputFileWriters", str(len(splits) + 1))
+    with scoped_conf(
+        df.sparkSession, "spark.sql.maxConcurrentOutputFileWriters", str(len(splits) + 1)
+    ):
         (
             df.withColumn("_split", split_col)
             .coalesce(1)
@@ -110,8 +161,6 @@ def _stage_split_parquet(df, split_col, splits, stage_dir: str) -> None:
             .partitionBy("_split")
             .parquet(tmp)
         )
-    finally:
-        spark.conf.set("spark.sql.maxConcurrentOutputFileWriters", old_writers)
     for label, (name, mtime) in splits.items():
         parts = glob.glob(os.path.join(tmp, f"_split={label}", "part-*.parquet"))
         if not parts:
@@ -167,10 +216,6 @@ def streaming_late_data_live(spark, sf_dir):
     which is what makes the run SQL-oracle-able: on-time membership is an
     integer-µs range predicate and the emitted set is the windows whose end
     precedes the final watermark (max on-time ts − 10 min)."""
-    from pyspark.sql import functions as F
-
-    from airflow_cms_inpatient_etl_spark.sources.registry import load_table
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
@@ -180,14 +225,10 @@ def streaming_late_data_live(spark, sf_dir):
     lo_us, hi_us = ev.agg(
         F.unix_micros(F.min("ts")), F.unix_micros(F.max("ts"))
     ).collect()[0]
-    stage_dir = tempfile.mkdtemp(prefix="events_late_")
-    try:
-        # staged files carry ts as µs longs so the stream schema is explicit
+    with _staging() as stage_dir:
         as_long = ev.withColumn("ts", F.unix_micros("ts"))
         cut_us = F.lit(lo_us + (hi_us - lo_us) // 5)
         mid_us = F.lit(lo_us + (hi_us - lo_us) * 3 // 5)
-        # all three micro-batch files staged in ONE pass over events
-        # (was three filtered coalesce(1) jobs — guide §6, round-15 deferred)
         _stage_split_parquet(
             as_long,
             F.when(F.col("ts") < cut_us, "c")
@@ -200,28 +241,10 @@ def streaming_late_data_live(spark, sf_dir):
             },
             stage_dir,
         )
-        raw = (
-            spark.readStream.schema(
-                "event_id long, ts long, user_id long, event_type string, "
-                "value double, props string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
+        events = _one_file_per_batch(spark, _EVENTS_US_SCHEMA, stage_dir).withColumn(
+            "ts", F.timestamp_micros("ts")
         )
-        events = raw.withColumn("ts", F.timestamp_micros("ts"))
-        name = f"stream_late_{uuid.uuid4().hex[:8]}"
-        # 8 state partitions for the drain (see streaming_tumbling_live);
-        # watermark/late-drop semantics depend on batch boundaries
-        # (maxFilesPerTrigger=1), never on the state partition count
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            run_stream_to_memory(tumbling_counts(events), name, output_mode="append")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        return spark.table(name)
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
+        return run_stream_to_memory(tumbling_counts(events), "append")
 
 
 @register(
@@ -245,29 +268,11 @@ def streaming_stream_stream_join_live(spark, sf_dir):
     single-batch drain deterministically produces the complete interval
     join — which is plain SQL.  Batch-equivalence under multi-batch
     arrival stays covered in tests/test_streaming.py."""
-    from airflow_cms_inpatient_etl_spark.streaming.jobs import (
-        stream_stream_click_view_join,
-    )
-
-    stage_dir = tempfile.mkdtemp(prefix="events_ssj_")
-    # the symmetric-hash join runs one state-store task per shuffle partition
-    # per micro-batch; a vanilla session's 200 partitions would spend ~30 s on
-    # task dispatch for this one-shot fixture drain.  Scope the stream to 8
-    # state partitions (captured at query start; a long-lived production
-    # stream sizes this to its cluster once — the checkpoint pins it after).
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        shutil.copy(f"{sf_dir}/events.parquet", f"{stage_dir}/part-0.parquet")
-        name = f"stream_ssj_{uuid.uuid4().hex[:8]}"
+    with _staged_events(sf_dir) as stage_dir:
         joined = stream_stream_click_view_join(
             stream_events(spark, stage_dir), stream_events(spark, stage_dir)
         )
-        run_stream_to_memory(joined, name, output_mode="append")
-        return spark.table(name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(stage_dir, ignore_errors=True)
+        return run_stream_to_memory(joined, "append")
 
 
 @register(
@@ -290,24 +295,11 @@ def streaming_stateful_profile_live(spark, sf_dir):
     accumulates EXACT integer cents (see streaming/stateful.py), so the
     update-mode drain of a single batch emits one bit-deterministic row per
     user equal to the batch decimal aggregate — plain SQL.  Multi-batch
-    accumulation equivalence stays covered in tests/test_streaming.py.  Shuffle partitions
-    are scoped to 8 for the same state-store task-dispatch reason as the
-    stream-stream join above."""
-    from airflow_cms_inpatient_etl_spark.streaming.stateful import running_user_profile
-
-    stage_dir = tempfile.mkdtemp(prefix="events_stateful_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        shutil.copy(f"{sf_dir}/events.parquet", f"{stage_dir}/part-0.parquet")
-        name = f"stream_state_{uuid.uuid4().hex[:8]}"
-        run_stream_to_memory(
-            running_user_profile(stream_events(spark, stage_dir)), name, output_mode="update"
+    accumulation equivalence stays covered in tests/test_streaming.py."""
+    with _staged_events(sf_dir) as stage_dir:
+        return run_stream_to_memory(
+            running_user_profile(stream_events(spark, stage_dir)), "update"
         )
-        return spark.table(name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(stage_dir, ignore_errors=True)
 
 
 @register(
@@ -330,10 +322,6 @@ def streaming_dedup_within_watermark_live(spark, sf_dir):
     equals the batch DISTINCT — i.e. the events table itself, which is the
     SQL oracle.  Eviction-under-advancing-watermark is covered separately in
     tests/test_streaming.py, where determinism is not required."""
-    from pyspark.sql import functions as F
-
-    from airflow_cms_inpatient_etl_spark.sources.registry import load_table
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
@@ -341,13 +329,7 @@ def streaming_dedup_within_watermark_live(spark, sf_dir):
         F.unix_micros(F.min("ts")), F.unix_micros(F.max("ts"))
     ).collect()[0]
     horizon_min = (hi_us - lo_us) // 60_000_000 + 11
-    stage_dir = tempfile.mkdtemp(prefix="events_dedup_")
-    # stateful dedup runs one state-store task per shuffle partition per
-    # micro-batch; scope the one-shot drain to 8 state partitions (same
-    # rationale as the stream-stream join above)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _staging() as stage_dir:
         as_long = ev.withColumn("ts", F.unix_micros("ts"))
         # the redelivery file is byte-identical to the first — write once,
         # copy the file (was two identical full-scan coalesce(1) jobs)
@@ -356,26 +338,14 @@ def streaming_dedup_within_watermark_live(spark, sf_dir):
         redeliver = os.path.join(stage_dir, "b_redelivery.parquet")
         shutil.copy(first, redeliver)
         os.utime(redeliver, (1_000_000_100.0, 1_000_000_100.0))
-        raw = (
-            spark.readStream.schema(
-                "event_id long, ts long, user_id long, event_type string, "
-                "value double, props string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
-        )
         deduped = (
-            raw.withColumn("ts", F.timestamp_micros("ts"))
+            _one_file_per_batch(spark, _EVENTS_US_SCHEMA, stage_dir)
+            .withColumn("ts", F.timestamp_micros("ts"))
             .withWatermark("ts", f"{horizon_min} minutes")
             .dropDuplicatesWithinWatermark(["event_id"])
             .select("event_id", "ts", "event_type", "value")
         )
-        name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-        run_stream_to_memory(deduped, name, output_mode="append")
-        return spark.table(name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(stage_dir, ignore_errors=True)
+        return run_stream_to_memory(deduped, "append")
 
 
 @register(
@@ -413,18 +383,10 @@ def streaming_session_window_live(spark, sf_dir):
     `events_session_window`).  In production the same plan runs in append
     mode where the watermark EVICTS closed sessions — bounded state; that
     eviction path is exercised in tests/test_streaming.py."""
-    import pyspark.sql.functions as F
-
-    from airflow_cms_inpatient_etl_spark.functions.exact import dsum
-
-    stage_dir = tempfile.mkdtemp(prefix="events_sess_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        shutil.copy(f"{sf_dir}/events.parquet", f"{stage_dir}/part-0.parquet")
-        ev = stream_events(spark, stage_dir)
+    with _staged_events(sf_dir) as stage_dir:
         agg = (
-            ev.withWatermark("ts", "10 minutes")
+            stream_events(spark, stage_dir)
+            .withWatermark("ts", "10 minutes")
             .groupBy(F.session_window("ts", "30 minutes"), "user_id")
             .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value"))
             .select(
@@ -435,12 +397,7 @@ def streaming_session_window_live(spark, sf_dir):
                 "sum_value",
             )
         )
-        name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-        run_stream_to_memory(agg, name, output_mode="complete")
-        return spark.table(name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(stage_dir, ignore_errors=True)
+        return run_stream_to_memory(agg, "complete")
 
 
 @register(
@@ -464,16 +421,10 @@ def streaming_sliding_window_live(spark, sf_dir):
     trio (tumbling and session already run live).  Each event lands in
     length/slide windows exactly as in the batch expansion, so the drained
     sink equals the batch sliding aggregation, which is the oracle."""
-    import pyspark.sql.functions as F
-
-    stage_dir = tempfile.mkdtemp(prefix="events_slide_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        shutil.copy(f"{sf_dir}/events.parquet", f"{stage_dir}/part-0.parquet")
-        ev = stream_events(spark, stage_dir)
+    with _staged_events(sf_dir) as stage_dir:
         agg = (
-            ev.withWatermark("ts", "10 minutes")
+            stream_events(spark, stage_dir)
+            .withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "10 minutes", "5 minutes"))
             .agg(F.count(F.lit(1)).alias("n"))
             .select(
@@ -482,12 +433,7 @@ def streaming_sliding_window_live(spark, sf_dir):
                 "n",
             )
         )
-        name = f"stream_slide_{uuid.uuid4().hex[:8]}"
-        run_stream_to_memory(agg, name, output_mode="complete")
-        return spark.table(name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(stage_dir, ignore_errors=True)
+        return run_stream_to_memory(agg, "complete")
 
 
 @register(
@@ -495,7 +441,7 @@ def streaming_sliding_window_live(spark, sf_dir):
     # the drained sink equals the BATCH incremental-dedup query exactly (the
     # gate is per-document and documents arrive whole, so micro-batching
     # cannot change the result) — reuse its oracle verbatim
-    oracle=None,  # filled below from the registered batch query
+    oracle=QUERY_REGISTRY["dedup_incremental_index"].oracle,
 )
 def streaming_dedup_gate_live(spark, sf_dir):
     """LIVE streaming ingest dedup — `dedup_incremental_index` as a running
@@ -509,14 +455,6 @@ def streaming_dedup_gate_live(spark, sf_dir):
     `streaming_tumbling_live`.  The two-batch split is the proof of
     incrementality: a single-drain run would be indistinguishable from
     batch."""
-    from pyspark.sql import functions as F
-
-    from airflow_cms_inpatient_etl_spark.operators.text import (
-        exploded_shingle_hashes,
-    )
-    from airflow_cms_inpatient_etl_spark.sources.registry import load_table, snapshot
-    from airflow_cms_inpatient_etl_spark.streaming.jobs import stream_dedup_gate
-
     d = load_table(spark, sf_dir, "documents")
     index = snapshot(
         exploded_shingle_hashes(d.filter(F.col("doc_id") % 10 != 0), "doc_id", "text")
@@ -524,69 +462,27 @@ def streaming_dedup_gate_live(spark, sf_dir):
         .distinct()
     )
     delta = d.filter(F.col("doc_id") % 10 == 0)
-    stage_dir = tempfile.mkdtemp(prefix="docs_stream_")
-    out_dir = tempfile.mkdtemp(prefix="dedup_gate_out_")
-    ckpt_dir = tempfile.mkdtemp(prefix="dedup_gate_ckpt_")
-    try:
-        # both micro-batch files staged in ONE pass over the delta (guide §6)
+    with _staging() as stage_dir:
+        in_dir, out_dir, ckpt_dir = (os.path.join(stage_dir, s) for s in ("in", "out", "ckpt"))
+        os.mkdir(in_dir)
         _stage_split_parquet(
             delta,
             F.when(F.col("doc_id") % 20 == 0, "a").otherwise("b"),
             {"a": ("batch_a.parquet", 1_000), "b": ("batch_b.parquet", 2_000)},
-            stage_dir,
+            in_dir,
         )
-        stream = (
-            spark.readStream.schema(delta.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
-        )
-        # out_dir exists but is empty; foreachBatch appends into it
-        shutil.rmtree(out_dir, ignore_errors=True)
-        # 8 shuffle partitions for the per-micro-batch gate joins (see
-        # streaming_tumbling_live) — the gate rows are join results, invariant
-        # to partitioning; the conf is restored before the sink is read back.
-        # The set/restore pair brackets stream start too, and the restore is
-        # its own finally so a q.stop() failure can't leak the setting
-        # (round-15 ADVICE).
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        q = None
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = stream_dedup_gate(stream, index, out_dir, ckpt_dir)
-            q.processAllAvailable()
-        finally:
-            try:
-                spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-            finally:
-                if q is not None:
-                    q.stop()
+        stream = _one_file_per_batch(spark, delta.schema, in_dir)
+        drain_stream(spark, lambda: stream_dedup_gate(stream, index, out_dir, ckpt_dir))
         rows = [
             (r["doc_id"], r["n_shingles"], r["n_shared"], r["shared_frac"],
              r["near_dup_of_corpus"])
             for r in spark.read.parquet(out_dir).collect()
         ]
-        return spark.createDataFrame(
-            rows,
-            schema="doc_id bigint, n_shingles bigint, n_shared bigint, "
-            "shared_frac double, near_dup_of_corpus boolean",
-        )
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-
-
-# wire the batch query's oracle onto the live run (same final table by
-# construction); dedup is imported before this module by queries/__init__,
-# and a direct import keeps standalone module loading working too
-import dataclasses as _dc  # noqa: E402
-
-from airflow_cms_inpatient_etl_spark.queries import dedup as _dedup  # noqa: E402,F401
-from airflow_cms_inpatient_etl_spark.queries.base import QUERY_REGISTRY as _REG  # noqa: E402
-
-_REG["streaming_dedup_gate_live"] = _dc.replace(
-    _REG["streaming_dedup_gate_live"], oracle=_REG["dedup_incremental_index"].oracle
-)
+    return spark.createDataFrame(
+        rows,
+        schema="doc_id bigint, n_shingles bigint, n_shared bigint, "
+        "shared_frac double, near_dup_of_corpus boolean",
+    )
 
 
 @register(
@@ -594,8 +490,8 @@ _REG["streaming_dedup_gate_live"] = _dc.replace(
     # the drained COMPLETE-mode grid is CELL-EXACT equal to the batch sketch
     # (cell updates are associative integer adds, so micro-batching cannot
     # change the final grid) — the estimate/accountability tail is therefore
-    # identical to heavy_hitters_cms and its oracle is reused verbatim below
-    oracle=None,  # filled below from the registered batch query
+    # identical to heavy_hitters_cms and its oracle is reused verbatim
+    oracle=QUERY_REGISTRY["heavy_hitters_cms"].oracle,
 )
 def streaming_heavy_hitters_live(spark, sf_dir):
     """LIVE streaming count-min sketch — `heavy_hitters_cms` as a running
@@ -610,19 +506,8 @@ def streaming_heavy_hitters_live(spark, sf_dir):
     within the empirical width bound) keeps the batch query's full DuckDB
     oracle — the `streaming_tumbling_live` contract extended to sketches.
     The two-batch split is the proof of incremental state maintenance."""
-    from pyspark.sql import functions as F
-
-    from airflow_cms_inpatient_etl_spark.operators.sketch import cms_estimate
-    from airflow_cms_inpatient_etl_spark.sources.registry import load_table
-    from airflow_cms_inpatient_etl_spark.streaming.jobs import (
-        run_stream_to_memory,
-        stream_cms_cells,
-    )
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "props")
-    stage_dir = tempfile.mkdtemp(prefix="events_cms_")
-    try:
-        # both micro-batch files staged in ONE pass over events (guide §6)
+    with _staging() as stage_dir:
         _stage_split_parquet(
             ev,
             F.when(F.col("event_id") % 2 == 0, "a").otherwise("b"),
@@ -632,54 +517,32 @@ def streaming_heavy_hitters_live(spark, sf_dir):
             },
             stage_dir,
         )
-        raw = (
-            spark.readStream.schema("event_id long, props string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
+        raw = _one_file_per_batch(spark, "event_id long, props string", stage_dir)
+        sketch = run_stream_to_memory(stream_cms_cells(raw), "complete")
+
+    # accountability tail — identical to heavy_hitters_cms, fed by the
+    # STREAMED grid instead of a batch build
+    items = (
+        load_table(spark, sf_dir, "events")
+        .select(F.get_json_object("props", "$.k").cast("long").alias("item"))
+        .filter(F.col("item").isNotNull())
+    )
+    exact = items.groupBy("item").agg(F.count(F.lit(1)).alias("exact_count"))
+    est = cms_estimate(exact, sketch, "item", 4, 64)
+    total = exact.agg(F.sum("exact_count").alias("n_total"))
+    return (
+        exact.join(est, "item")
+        .crossJoin(F.broadcast(total))
+        .select(
+            "item",
+            "exact_count",
+            (F.col("cms_estimate") >= F.col("exact_count")).alias("est_ge_exact"),
+            (
+                F.col("cms_estimate") - F.col("exact_count")
+                <= F.expr("8 * n_total div 64")
+            ).alias("within_bound"),
         )
-        name = f"stream_cms_{uuid.uuid4().hex[:8]}"
-        # 8 state partitions for the drain (see streaming_tumbling_live);
-        # CMS cell updates are associative integer adds — grid invariant
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            run_stream_to_memory(stream_cms_cells(raw), name, output_mode="complete")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        sketch = spark.table(name)
-
-        # accountability tail — identical to heavy_hitters_cms, fed by the
-        # STREAMED grid instead of a batch build
-        items = (
-            load_table(spark, sf_dir, "events")
-            .select(F.get_json_object("props", "$.k").cast("long").alias("item"))
-            .filter(F.col("item").isNotNull())
-        )
-        exact = items.groupBy("item").agg(F.count(F.lit(1)).alias("exact_count"))
-        est = cms_estimate(exact, sketch, "item", 4, 64)
-        total = exact.agg(F.sum("exact_count").alias("n_total"))
-        return (
-            exact.join(est, "item")
-            .crossJoin(F.broadcast(total))
-            .select(
-                "item",
-                "exact_count",
-                (F.col("cms_estimate") >= F.col("exact_count")).alias("est_ge_exact"),
-                (
-                    F.col("cms_estimate") - F.col("exact_count")
-                    <= F.expr("8 * n_total div 64")
-                ).alias("within_bound"),
-            )
-        )
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-
-
-from airflow_cms_inpatient_etl_spark.queries import curation2 as _curation2  # noqa: E402,F401
-
-_REG["streaming_heavy_hitters_live"] = _dc.replace(
-    _REG["streaming_heavy_hitters_live"], oracle=_REG["heavy_hitters_cms"].oracle
-)
+    )
 
 
 @register(
@@ -687,8 +550,8 @@ _REG["streaming_heavy_hitters_live"] = _dc.replace(
     # the drained COMPLETE-mode census is CELL-EXACT equal to the batch
     # dyadic tree (cell updates are associative integer adds), so the
     # prune/CDF/quantile/verification tail — and the batch query's DuckDB
-    # bounds-oracle — apply verbatim; filled below from the registered query
-    oracle=None,
+    # bounds-oracle — apply verbatim
+    oracle=QUERY_REGISTRY["sketch_qdigest_quantiles"].oracle,
 )
 def streaming_percentiles_live(spark, sf_dir):
     """LIVE streaming percentiles — `sketch_qdigest_quantiles` as a running
@@ -705,25 +568,8 @@ def streaming_percentiles_live(spark, sf_dir):
     batch query's full DuckDB bounds-oracle — the
     `streaming_heavy_hitters_live` doctrine extended from frequency to RANK.
     The two-batch split is the proof of incremental state maintenance."""
-    from pyspark.sql import functions as F
-
-    from airflow_cms_inpatient_etl_spark.queries.analytics import (
-        _QD_BITS,
-        _QD_RADIX,
-        _qdigest_flags_from_tree,
-    )
-    from airflow_cms_inpatient_etl_spark.operators.sketch import dyadic_tree
-    from airflow_cms_inpatient_etl_spark.sources.registry import load_table, snapshot
-    from airflow_cms_inpatient_etl_spark.streaming.jobs import (
-        run_stream_to_memory,
-        stream_qdigest_leaves,
-    )
-
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
-    stage_dir = tempfile.mkdtemp(prefix="lineitem_qd_")
-    try:
-        # both micro-batch files staged in ONE pass over lineitem (guide §6:
-        # one scan+write instead of two — the round-15 deferred item)
+    with _staging() as stage_dir:
         _stage_split_parquet(
             li,
             F.when(F.col("l_orderkey") % 2 == 0, "a").otherwise("b"),
@@ -733,53 +579,26 @@ def streaming_percentiles_live(spark, sf_dir):
             },
             stage_dir,
         )
-        raw = (
-            spark.readStream.schema("l_orderkey long, l_extendedprice double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
+        cents_stream = _one_file_per_batch(
+            spark, "l_orderkey long, l_extendedprice double", stage_dir
+        ).select(F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"))
+        leaves = run_stream_to_memory(
+            stream_qdigest_leaves(cents_stream, "cents", _QD_BITS), "complete"
         )
-        cents_stream = raw.select(
-            F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents")
-        )
-        name = f"stream_qd_{uuid.uuid4().hex[:8]}"
-        # 8 state partitions for the drain (see streaming_tumbling_live);
-        # leaf-histogram updates are associative integer adds — census
-        # invariant; the conf is restored before the batch tail executes
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            run_stream_to_memory(
-                stream_qdigest_leaves(cents_stream, "cents", _QD_BITS),
-                name,
-                output_mode="complete",
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        tree = snapshot(
-            dyadic_tree(spark.table(name), "v", _QD_BITS, radix=_QD_RADIX, weight_col="cnt")
-        )
+    tree = snapshot(dyadic_tree(leaves, "v", _QD_BITS, radix=_QD_RADIX, weight_col="cnt"))
 
-        # verification tail — identical to sketch_qdigest_quantiles, fed by
-        # the STREAMED census instead of a batch build; spread the one-task
-        # fixture scan so the x5 verification expansion parallelizes (guarded
-        # no-op on a parallel production scan)
-        from airflow_cms_inpatient_etl_spark.sources.registry import spread_scan
-
-        vals = spread_scan(
-            load_table(spark, sf_dir, "lineitem").select(
-                "l_orderkey",
-                F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-            ),
+    # verification tail — identical to sketch_qdigest_quantiles, fed by
+    # the STREAMED census instead of a batch build; spread the one-task
+    # fixture scan so the x5 verification expansion parallelizes (guarded
+    # no-op on a parallel production scan)
+    vals = spread_scan(
+        load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey",
-        ).select("cents")
-        return _qdigest_flags_from_tree(spark, tree, vals)
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-
-
-_REG["streaming_percentiles_live"] = _dc.replace(
-    _REG["streaming_percentiles_live"], oracle=_REG["sketch_qdigest_quantiles"].oracle
-)
+            F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+        ),
+        "l_orderkey",
+    ).select("cents")
+    return _qdigest_flags_from_tree(spark, tree, vals)
 
 
 @register(
@@ -809,28 +628,10 @@ def streaming_asof_live(spark, sf_dir):
     reduces the DRAINED sink — purchase-grained, not stream-grained (the
     `streaming_percentiles_live` drain-then-reduce discipline).  Purchases
     with no click inside the tolerance do not emit (inner as-of).
-    Multi-batch arrival equivalence is asserted in tests/test_round15.py.
-    Shuffle partitions are scoped to 8 for the state-store task-dispatch
-    reason documented on the stream-stream join above."""
-    from pyspark.sql import functions as F
-
-    from airflow_cms_inpatient_etl_spark.streaming.jobs import stream_asof_candidates
-
-    stage_dir = tempfile.mkdtemp(prefix="events_asof_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        shutil.copy(f"{sf_dir}/events.parquet", f"{stage_dir}/part-0.parquet")
-        name = f"stream_asof_{uuid.uuid4().hex[:8]}"
-        cand = stream_asof_candidates(
-            stream_events(spark, stage_dir), stream_events(spark, stage_dir)
+    Multi-batch arrival equivalence is asserted in tests/test_round15.py."""
+    with _staged_events(sf_dir) as stage_dir:
+        cand = run_stream_to_memory(
+            stream_asof_candidates(stream_events(spark, stage_dir), stream_events(spark, stage_dir)),
+            "append",
         )
-        run_stream_to_memory(cand, name, output_mode="append")
-        return (
-            spark.table(name)
-            .groupBy("event_id", "user_id", "ts")
-            .agg(F.max("click_ts").alias("last_click_ts"))
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(stage_dir, ignore_errors=True)
+    return cand.groupBy("event_id", "user_id", "ts").agg(F.max("click_ts").alias("last_click_ts"))

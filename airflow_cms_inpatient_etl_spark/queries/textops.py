@@ -16,6 +16,7 @@ from airflow_cms_inpatient_etl_spark.operators.scrub import (
     scrub_counts,
     scrub_text,
 )
+from airflow_cms_inpatient_etl_spark.operators.text import hash60
 from airflow_cms_inpatient_etl_spark.queries.base import register
 from airflow_cms_inpatient_etl_spark.sources.registry import load_table, spread_scan
 
@@ -238,7 +239,7 @@ def text_rolling_hash(spark, sf_dir):
     tokens = _words(F.col("text"))
     hashed = F.transform(
         tokens,
-        lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long") % 2147483647,
+        lambda t: hash60(t) % 2147483647,
     )
     rolling = F.aggregate(
         hashed, F.lit(0).cast("long"), lambda acc, h: (acc * 31 + h) % 2147483647

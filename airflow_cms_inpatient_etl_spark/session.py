@@ -16,6 +16,8 @@ here are what we would ship to a real cluster, modulo local-mode sizing:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -81,3 +83,21 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set one session conf for the body of a ``with`` block.
+
+    On exit the key gets its previous value back, or is unset again if it was
+    unset, also when the body raises: a query leaves the session's conf as it
+    found it."""
+    old = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, value)
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)

@@ -77,52 +77,18 @@ def write_table(df: DataFrame, path: str, mode: str = "overwrite", partition_by:
     writer.parquet(path)
 
 
-def avro_available(spark: SparkSession) -> bool:
-    """The avro format ships as an EXTERNAL module (org.apache.spark:spark-avro),
-    deliberately not bundled with Spark core — availability depends on the
-    deployment's classpath, so the engine probes instead of assuming."""
+def lakehouse_format_available(spark: SparkSession, fmt: str) -> bool:
+    """Probe for an external connector format: ``avro`` (spark-avro) or a
+    lakehouse table format (``delta`` / ``iceberg``).
+
+    None is bundled with Spark core (org.apache.spark:spark-avro,
+    io.delta:delta-spark, org.apache.iceberg:iceberg-spark-runtime), so
+    availability depends on the deployment's classpath and the engine probes
+    instead of assuming."""
     try:
-        # the authoritative resolution Spark itself performs for format("avro");
+        # the authoritative resolution Spark itself performs for format(fmt);
         # a bare Class.forName probe false-positives because catalyst bundles
         # some avro helper classes without the DataSource provider
-        spark._jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
-            "avro", spark._jsparkSession.sessionState().conf()
-        )
-        return True
-    except Exception:
-        return False
-
-
-def read_avro(spark: SparkSession, path: str) -> DataFrame:
-    """Avro scan (row-oriented interchange format — the common Kafka/ingest
-    landing format).  Raises a clear error when the spark-avro module is not
-    on the classpath rather than an opaque ClassNotFound from the JVM."""
-    if not avro_available(spark):
-        raise NotImplementedError(
-            "spark-avro is not on this deployment's classpath; submit with "
-            "--packages org.apache.spark:spark-avro_2.13:<spark-version>"
-        )
-    return spark.read.format("avro").load(path)
-
-
-def write_avro(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    if not avro_available(df.sparkSession):
-        raise NotImplementedError(
-            "spark-avro is not on this deployment's classpath; submit with "
-            "--packages org.apache.spark:spark-avro_2.13:<spark-version>"
-        )
-    df.write.mode(mode).format("avro").save(path)
-
-
-def lakehouse_format_available(spark: SparkSession, fmt: str) -> bool:
-    """Probe for a lakehouse table format connector (``delta`` / ``iceberg``).
-
-    Both ship as external connectors (io.delta:delta-spark /
-    org.apache.iceberg:iceberg-spark-runtime) — availability depends on the
-    deployment's classpath, so the engine probes with the same authoritative
-    resolution Spark performs for ``format(fmt)`` (see ``avro_available``).
-    """
-    try:
         spark._jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
             fmt, spark._jsparkSession.sessionState().conf()
         )
@@ -131,7 +97,11 @@ def lakehouse_format_available(spark: SparkSession, fmt: str) -> bool:
         return False
 
 
-_LAKEHOUSE_REMEDIATION = {
+_CONNECTOR_REMEDIATION = {
+    "avro": (
+        "spark-avro is not on this deployment's classpath; submit with "
+        "--packages org.apache.spark:spark-avro_2.13:<spark-version>"
+    ),
     "delta": (
         "Delta Lake is not on this deployment's classpath; submit with "
         "--packages io.delta:delta-spark_2.13:<version> and "
@@ -148,21 +118,37 @@ _LAKEHOUSE_REMEDIATION = {
 }
 
 
+def _require_connector(spark: SparkSession, fmt: str) -> None:
+    """Raise the actionable remediation, never an opaque JVM ClassNotFound,
+    when ``fmt``'s connector is not on the classpath."""
+    if not lakehouse_format_available(spark, fmt):
+        raise NotImplementedError(_CONNECTOR_REMEDIATION[fmt])
+
+
+def read_avro(spark: SparkSession, path: str) -> DataFrame:
+    """Avro scan (row-oriented interchange format — the common Kafka/ingest
+    landing format), gated on the spark-avro module."""
+    _require_connector(spark, "avro")
+    return spark.read.format("avro").load(path)
+
+
+def write_avro(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    _require_connector(df.sparkSession, "avro")
+    df.write.mode(mode).format("avro").save(path)
+
+
 def read_lakehouse(spark: SparkSession, fmt: str, path: str) -> DataFrame:
     """Lakehouse table scan (Delta/Iceberg) — the transaction-logged table
     layer the CDC/upsert/SCD2 operators (``operators/upsert.py``) target in
     a production deployment, where their MERGE-equivalent joins become the
     connector's native ``MERGE INTO`` against the table log.  Gated like
-    Avro: a clear actionable error when the connector is absent, never a raw
-    JVM ClassNotFound."""
-    if not lakehouse_format_available(spark, fmt):
-        raise NotImplementedError(_LAKEHOUSE_REMEDIATION[fmt])
+    Avro."""
+    _require_connector(spark, fmt)
     return spark.read.format(fmt).load(path)
 
 
 def write_lakehouse(df: DataFrame, fmt: str, path: str, mode: str = "overwrite") -> None:
-    if not lakehouse_format_available(df.sparkSession, fmt):
-        raise NotImplementedError(_LAKEHOUSE_REMEDIATION[fmt])
+    _require_connector(df.sparkSession, fmt)
     df.write.mode(mode).format(fmt).save(path)
 
 

@@ -14,9 +14,20 @@ store would back this on a real cluster.
 
 from __future__ import annotations
 
+import uuid
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
+
+from airflow_cms_inpatient_etl_spark.session import scoped_conf
+
+# state partitions of a drained stream: stateful operators run one state-store
+# task per shuffle partition per micro-batch, so a one-shot drain at the
+# session's count (200 in a vanilla session) spends its time dispatching tasks
+DRAIN_STATE_PARTITIONS = 8
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -156,19 +167,37 @@ def stream_asof_candidates(
     ).select("event_id", "user_id", "ts", "click_ts")
 
 
-def run_stream_to_memory(df: DataFrame, name: str, output_mode: str) -> None:
-    """Drive a streaming query to completion against the memory sink (local
-    test harness: processAllAvailable drains the file source synchronously)."""
-    q = (
-        df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
+def drain_stream(spark: SparkSession, start: Callable[[], StreamingQuery]) -> StreamingQuery:
+    """Start a stream with ``start()``, process everything available, stop it.
+
+    The stream runs with ``DRAIN_STATE_PARTITIONS`` shuffle partitions: the
+    state-partition count is fixed when the query starts, so the conf is
+    scoped around start and drain, and restored even if ``stop()`` fails.
+    Returns the stopped query (its ``recentProgress`` stays readable)."""
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", str(DRAIN_STATE_PARTITIONS)):
+        q = start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    return q
+
+
+def run_stream_to_memory(df: DataFrame, output_mode: str) -> DataFrame:
+    """Drain a streaming query into a memory sink and return the drained
+    table.  The sink gets a unique name, and its temp view is dropped before
+    returning, also on failure: the returned frame already holds the sink's
+    rows, so the catalog is left as it was found."""
+    spark = df.sparkSession
+    name = f"drain_{uuid.uuid4().hex[:8]}"
     try:
-        q.processAllAvailable()
+        drain_stream(
+            spark,
+            lambda: df.writeStream.outputMode(output_mode).format("memory").queryName(name).start(),
+        )
+        return spark.table(name)
     finally:
-        q.stop()
+        spark.catalog.dropTempView(name)
 
 
 def stream_upsert_to_parquet(
@@ -199,6 +228,10 @@ def stream_upsert_to_parquet(
     from pyspark.sql import Window as W
 
     from airflow_cms_inpatient_etl_spark.operators.upsert import upsert
+    from airflow_cms_inpatient_etl_spark.sources.registry import (
+        release_snapshots,
+        tracked_localcheckpoint,
+    )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -222,9 +255,13 @@ def stream_upsert_to_parquet(
         else:  # genuinely the first batch
             merged = compacted
         # rows must be materialized before the overwrite truncates the input
-        # (plain parquet has no snapshot isolation; Delta/Iceberg would)
-        pdf_free = merged.localCheckpoint(eager=True)
-        pdf_free.write.mode("overwrite").parquet(target_dir)
+        # (plain parquet has no snapshot isolation; Delta/Iceberg would); the
+        # pinned blocks are released once the overwrite has committed
+        pdf_free, ids = tracked_localcheckpoint(merged, eager=True)
+        try:
+            pdf_free.write.mode("overwrite").parquet(target_dir)
+        finally:
+            release_snapshots(spark, ids=ids)
 
     return (
         updates.writeStream.foreachBatch(merge_batch)

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from airflow_cms_inpatient_etl_spark.operators.graph import pagerank_integer
 from airflow_cms_inpatient_etl_spark.operators.sketch import cms_merge
+from airflow_cms_inpatient_etl_spark.session import scoped_conf
 from airflow_cms_inpatient_etl_spark.sources.registry import load_table
 from tests.conftest import SF_ORACLE
 
@@ -1000,8 +1001,7 @@ def test_streaming_session_window_eviction_append_mode(spark, tmp_path):
             "n_events",
         )
     )
-    run_stream_to_memory(agg, "sess_evict_test", output_mode="append")
-    out = spark.table("sess_evict_test").toPandas()
+    out = run_stream_to_memory(agg, output_mode="append").toPandas()
     # session 1 (2 events merged) closed and emitted; session 2 still open
     assert len(out) == 1
     assert out.iloc[0].n_events == 2
@@ -1234,7 +1234,7 @@ def test_session_windows_identical_under_rocksdb_state_store(spark, tmp_path):
     os.makedirs(stage)
     shutil.copy("/root/testdata/sf0.001/events.parquet", stage + "/part-0.parquet")
 
-    def drain(name):
+    def drain():
         agg = (
             stream_events(spark, stage)
             .withWatermark("ts", "10 minutes")
@@ -1247,26 +1247,18 @@ def test_session_windows_identical_under_rocksdb_state_store(spark, tmp_path):
                 "n_events",
             )
         )
-        run_stream_to_memory(agg, name, output_mode="complete")
-        return spark.table(name)
+        return run_stream_to_memory(agg, output_mode="complete")
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    default = drain("sess_default_store")
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
+    default = drain()
+    with scoped_conf(
+        spark,
+        "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        rocks = drain("sess_rocksdb_store")
+    ):
+        rocks = drain()
         assert default.count() > 0
         assert default.exceptAll(rocks).count() == 0
         assert rocks.exceptAll(default).count() == 0
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
 
 
 def test_transform_with_state_profile_matches_legacy_and_batch(spark):
@@ -1294,27 +1286,20 @@ def test_transform_with_state_profile_matches_legacy_and_batch(spark):
 
     stage = tempfile.mkdtemp(prefix="tws_")
     shutil.copy("/root/testdata/sf0.001/events.parquet", stage + "/part-0.parquet")
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     try:
-        run_stream_to_memory(
-            running_user_profile_tws(stream_events(spark, stage)),
-            "tws_profile",
-            output_mode="update",
-        )
-        got = {
-            r["user_id"]: (r["n_events"], round(r["sum_value"], 2))
-            for r in spark.table("tws_profile").collect()
-        }
+        with scoped_conf(
+            spark,
+            "spark.sql.streaming.stateStore.providerClass",
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        ):
+            out = run_stream_to_memory(
+                running_user_profile_tws(stream_events(spark, stage)), output_mode="update"
+            )
+            got = {
+                r["user_id"]: (r["n_events"], round(r["sum_value"], 2))
+                for r in out.collect()
+            }
     finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
         shutil.rmtree(stage, ignore_errors=True)
     batch = (
         load_table(spark, "/root/testdata/sf0.001", "events")

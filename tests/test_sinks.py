@@ -280,13 +280,13 @@ def test_avro_roundtrip_or_gated(spark, tmp_path):
     DataSource provider, and no network/pypi to vendor it — the skip reason
     records exactly that.)"""
     from airflow_cms_inpatient_etl_spark.sources.files import (
-        avro_available,
+        lakehouse_format_available,
         read_avro,
         write_avro,
     )
 
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
-    if avro_available(spark):
+    if lakehouse_format_available(spark, "avro"):
         write_avro(df, str(tmp_path / "avro_t"))
         got = read_avro(spark, str(tmp_path / "avro_t"))
         assert sorted(r["id"] for r in got.collect()) == [1, 2]

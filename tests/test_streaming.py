@@ -4,21 +4,29 @@ the memory sink, asserted against the equivalent batch computation
 
 from __future__ import annotations
 
+import glob
+import os
 import shutil
-import uuid
+import tempfile
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from airflow_cms_inpatient_etl_spark.sources.registry import load_table
+from airflow_cms_inpatient_etl_spark.queries import QUERY_REGISTRY
+from airflow_cms_inpatient_etl_spark.queries.streaming_live import STAGE_PREFIX
+from airflow_cms_inpatient_etl_spark.session import scoped_conf
+from airflow_cms_inpatient_etl_spark.sources.registry import TESTDATA_TABLES, load_table
 from airflow_cms_inpatient_etl_spark.streaming.jobs import (
+    DRAIN_STATE_PARTITIONS,
     dedup_within_watermark,
+    drain_stream,
     run_stream_to_memory,
     stream_events,
     tumbling_counts,
 )
 from airflow_cms_inpatient_etl_spark.streaming.stateful import running_user_profile
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, assert_frames_match
 
 
 @pytest.fixture(scope="module")
@@ -29,17 +37,10 @@ def events_stream_dir(tmp_path_factory):
     return str(d)
 
 
-def _table(name):
-    return f"{name}_{uuid.uuid4().hex[:8]}"
-
-
 def test_streaming_tumbling_counts_match_batch(spark, events_stream_dir):
     events = stream_events(spark, events_stream_dir)
-    name = _table("tumbling")
-    run_stream_to_memory(tumbling_counts(events), name, output_mode="complete")
-    streamed = {
-        (r["window_start"], r["event_type"]): r["n"] for r in spark.table(name).collect()
-    }
+    out = run_stream_to_memory(tumbling_counts(events), output_mode="complete")
+    streamed = {(r["window_start"], r["event_type"]): r["n"] for r in out.collect()}
     batch = load_table(spark, SF_SMOKE, "events")
     expected = {
         (r["window"]["start"], r["event_type"]): r["n"]
@@ -54,11 +55,8 @@ def test_streaming_append_mode_emits_closed_windows(spark, events_stream_dir):
     """Append mode with a watermark: windows closed by the final watermark are
     emitted; the still-open tail may be withheld — so streamed ⊆ batch."""
     events = stream_events(spark, events_stream_dir)
-    name = _table("append")
-    run_stream_to_memory(tumbling_counts(events), name, output_mode="append")
-    streamed = {
-        (r["window_start"], r["event_type"]): r["n"] for r in spark.table(name).collect()
-    }
+    out = run_stream_to_memory(tumbling_counts(events), output_mode="append")
+    streamed = {(r["window_start"], r["event_type"]): r["n"] for r in out.collect()}
     batch = load_table(spark, SF_SMOKE, "events")
     expected = {
         (r["window"]["start"], r["event_type"]): r["n"]
@@ -80,14 +78,12 @@ def test_streaming_dedup_within_watermark(spark, events_stream_dir, tmp_path):
     _sh.copy(f"{events_stream_dir}/part-0.parquet", dup_dir / "a.parquet")
     _sh.copy(f"{events_stream_dir}/part-0.parquet", dup_dir / "b.parquet")
     events = stream_events(spark, str(dup_dir))
-    name = _table("dedup")
-    run_stream_to_memory(
+    out = run_stream_to_memory(
         dedup_within_watermark(events).select("user_id", "event_type", "ts"),
-        name,
         output_mode="append",
     )
     n_unique = load_table(spark, SF_SMOKE, "events").select("user_id", "event_type", "ts").distinct().count()
-    assert spark.table(name).count() == n_unique
+    assert out.count() == n_unique
 
 
 def test_foreach_batch_exactly_once_style_sink(spark, events_stream_dir, tmp_path):
@@ -159,17 +155,13 @@ def test_stream_stream_join_matches_batch(spark, events_stream_dir):
         stream_stream_click_view_join,
     )
 
-    name = _table("ssj")
-    run_stream_to_memory(
+    out = run_stream_to_memory(
         stream_stream_click_view_join(
             stream_events(spark, events_stream_dir), stream_events(spark, events_stream_dir)
         ),
-        name,
         output_mode="append",
     )
-    streamed = {
-        (r["click_id"], r["user_id"], r["view_ts"]) for r in spark.table(name).collect()
-    }
+    streamed = {(r["click_id"], r["user_id"], r["view_ts"]) for r in out.collect()}
     e = load_table(spark, SF_SMOKE, "events")
     clicks = e.filter(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"), F.col("user_id").alias("cu"), F.col("ts").alias("cts")
@@ -255,10 +247,9 @@ def test_kill_mid_batch_recovery_no_loss_no_dup(spark, tmp_path):
 def test_stateful_running_profile(spark, events_stream_dir):
     """applyInPandasWithState: final per-user totals equal the batch aggregate."""
     events = stream_events(spark, events_stream_dir)
-    name = _table("profile")
-    run_stream_to_memory(running_user_profile(events), name, output_mode="update")
+    out = run_stream_to_memory(running_user_profile(events), output_mode="update")
     # update mode with one input batch → one row per user
-    got = {r["user_id"]: (r["n_events"], round(r["sum_value"], 2)) for r in spark.table(name).collect()}
+    got = {r["user_id"]: (r["n_events"], round(r["sum_value"], 2)) for r in out.collect()}
     batch = (
         load_table(spark, SF_SMOKE, "events")
         .groupBy("user_id")
@@ -332,11 +323,15 @@ def test_stream_upsert_to_parquet_matches_batch_merge(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
+    jsc = spark.sparkContext._jsc
+    pinned_before = set(jsc.getPersistentRDDs().keySet().toArray())
     q = stream_upsert_to_parquet(updates, target, ckpt, ["key"], "seq")
     try:
         q.processAllAvailable()
     finally:
         q.stop()
+    # each micro-batch's merge checkpoint is released once its overwrite commits
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) <= pinned_before
 
     got = {r["key"]: (r["val"], r["seq"]) for r in spark.read.parquet(target).collect()}
     assert got == {
@@ -380,33 +375,18 @@ def test_stateful_sessionize_with_timeout(spark, tmp_path):
         os.rename(os.path.join(staging, part), dest)
         os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream = (
-            spark.readStream.schema("user_id long, ts long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-            .withColumn("ts", SF.timestamp_micros("ts"))
-        )
-        name = _table("sessions_timeout")
-        q = (
-            sessionize_with_timeout(stream, gap="30 minutes")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-
+    stream = (
+        spark.readStream.schema("user_id long, ts long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+        .withColumn("ts", SF.timestamp_micros("ts"))
+    )
+    out = run_stream_to_memory(
+        sessionize_with_timeout(stream, gap="30 minutes"), output_mode="append"
+    )
     got = {
         r["user_id"]: (r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.table(name).collect()
+        for r in out.collect()
     }
     from datetime import datetime, timezone
 
@@ -472,9 +452,8 @@ def test_streaming_cms_cells_equal_batch_sketch(spark, events_stream_dir):
     from airflow_cms_inpatient_etl_spark.streaming.jobs import stream_cms_cells
 
     events = stream_events(spark, events_stream_dir)
-    name = _table("cms")
-    run_stream_to_memory(stream_cms_cells(events), name, output_mode="complete")
-    streamed = {(r["row"], r["col"]): r["cnt"] for r in spark.table(name).collect()}
+    out = run_stream_to_memory(stream_cms_cells(events), output_mode="complete")
+    streamed = {(r["row"], r["col"]): r["cnt"] for r in out.collect()}
     items = load_table(spark, SF_SMOKE, "events").select(
         F.get_json_object("props", "$.k").cast("long").alias("item")
     )
@@ -517,38 +496,107 @@ def test_dedup_state_evicts_past_watermark(spark, tmp_path):
     stage([(i, t0 + H(hours=1), 1, "a", 0.0, "{}") for i in range(10, 20)], "b.parquet", 1e9 + 100)
     stage([(20, t0 + H(hours=2), 1, "a", 0.0, "{}")], "c.parquet", 1e9 + 200)
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        raw = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(d))
+    raw = (
+        spark.readStream.schema(
+            "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
         )
-        deduped = (
-            raw.withWatermark("ts", "10 minutes")
-            .dropDuplicatesWithinWatermark(["event_id"])
-            .select("event_id")
-        )
-        name = _table("evict")
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            progresses = [p for p in q.recentProgress if p["stateOperators"]]
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(d))
+    )
+    deduped = (
+        raw.withWatermark("ts", "10 minutes")
+        .dropDuplicatesWithinWatermark(["event_id"])
+        .select("event_id")
+    )
+    emitted = []
+    q = drain_stream(
+        spark,
+        lambda: deduped.writeStream.outputMode("append")
+        .foreachBatch(lambda b, _: emitted.extend(r["event_id"] for r in b.collect()))
+        .start(),
+    )
+    progresses = [p for p in q.recentProgress if p["stateOperators"]]
 
-    assert spark.table(name).count() == 21  # every key unique -> all emitted
+    assert sorted(emitted) == list(range(21))  # every key unique -> all emitted
     removed = sum(p["stateOperators"][0]["numRowsRemoved"] for p in progresses)
     final_total = progresses[-1]["stateOperators"][0]["numRowsTotal"]
     assert removed >= 10, removed  # batch-1 keys left the store
     assert final_total <= 11, final_total  # only keys inside the horizon remain
+
+
+# --------------------------------------------------------------------------- #
+# live-query session hygiene: every streaming_*_live query matches its oracle #
+# and leaves the session as it found it, also when it raises                  #
+# --------------------------------------------------------------------------- #
+_LIVES = sorted(
+    n for n in QUERY_REGISTRY if n.startswith("streaming_") and n.endswith("_live")
+)
+_SCOPED_CONFS = ("spark.sql.shuffle.partitions", "spark.sql.maxConcurrentOutputFileWriters")
+
+
+def _session_state(spark):
+    return (
+        sorted(t.name for t in spark.catalog.listTables()),
+        {k: spark.conf.get(k, None) for k in _SCOPED_CONFS},
+        sorted(glob.glob(os.path.join(tempfile.gettempdir(), STAGE_PREFIX + "*"))),
+        sorted(str(q.id) for q in spark.streams.active),
+    )
+
+
+@pytest.fixture
+def off_drain_partitions(spark):
+    """Hold the session's shuffle partitions at a value the drain never sets,
+    so a drain that leaks its own value shows in the before/after states."""
+    value = str(DRAIN_STATE_PARTITIONS - 1)
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", value):
+        assert _session_state(spark)[1]["spark.sql.shuffle.partitions"] == value
+        yield
+
+
+def test_scoped_conf_restores_set_and_unset_keys(spark):
+    shuffle, writers = _SCOPED_CONFS
+    before = _session_state(spark)
+    assert spark.conf.get(writers, None) is None
+    with pytest.raises(RuntimeError):
+        with scoped_conf(spark, shuffle, "3"), scoped_conf(spark, writers, "0"):
+            assert (spark.conf.get(shuffle), spark.conf.get(writers)) == ("3", "0")
+            raise RuntimeError("body fails")
+    assert spark.conf.get(writers, None) is None
+    assert _session_state(spark) == before
+
+
+@pytest.fixture(scope="module")
+def ddb_smoke():
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMOKE}/{t}.parquet'")
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", _LIVES)
+def test_live_query_matches_oracle_and_leaves_session_as_found(
+    spark, ddb_smoke, name, tmp_path, off_drain_partitions
+):
+    spec = QUERY_REGISTRY[name]
+    before = _session_state(spark)
+    got = spec.fn(spark, SF_SMOKE).toPandas()
+    assert _session_state(spark) == before
+    assert_frames_match(got, ddb_smoke.execute(spec.oracle).df(), name)
+    with pytest.raises(Exception):
+        spec.fn(spark, str(tmp_path / "missing_sf"))
+    assert _session_state(spark) == before
+
+
+def test_failed_drain_leaves_session_as_found(spark, tmp_path, off_drain_partitions):
+    """A stream that fails inside the drain still restores the conf, stops
+    the query and drops the sink's temp view."""
+    from airflow_cms_inpatient_etl_spark.streaming.jobs import stream_qdigest_leaves
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(-1,)], "v long").write.parquet(src)
+    stream = spark.readStream.schema("v long").parquet(src)
+    before = _session_state(spark)
+    with pytest.raises(Exception, match="value outside"):
+        run_stream_to_memory(stream_qdigest_leaves(stream, "v", 8), output_mode="complete")
+    assert _session_state(spark) == before
